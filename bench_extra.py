@@ -4,7 +4,7 @@ Phase-isolates the expensive operators so optimization targets the right
 stage. Methodology: warmup pass, then min of N timed passes per phase,
 noop sink. Same session config as bench.py.
 
-Usage: python bench_extra.py [minhash|kg|headline] [--sf-dir DIR] [--reps N]
+Usage: python bench_extra.py [minhash|headline] [--sf-dir DIR] [--reps N]
 """
 
 from __future__ import annotations

@@ -5,11 +5,12 @@ sclass labels, population names, morphology media refs) and synapse
 statements in document text. Two interchangeable implementations, tested
 for equality:
 
-* ``impl='arrow'`` (default) — vectorized ``pandas_udf``: regex runs as
-  pandas C-backed ``str.extractall`` over Arrow record batches, zero
-  per-row Python loops (north rule).
-* ``impl='native'`` — pure ``pyspark.sql.functions`` (``regexp_extract_all``
-  inside whole-stage codegen), the everything-JVM fast path.
+* ``impl='native'`` (default, as in ``PipelineConfig.mention_impl``) —
+  pure ``pyspark.sql.functions`` (``regexp_extract_all`` inside
+  whole-stage codegen), the everything-JVM fast path.
+* ``impl='arrow'`` — vectorized ``pandas_udf``: regex runs as pandas
+  C-backed ``str.extractall`` over Arrow record batches, zero per-row
+  Python loops (north rule).
 
 The reference has no mention detection (its entities arrive pre-structured
 from HDF5, ``circuit/data_extraction.py:52-58``); the *vocabulary* of what
@@ -155,13 +156,14 @@ def _extract_node_attrs(doc_text: pd.Series) -> pd.Series:
     return out
 
 
-def extract_documents(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
+def extract_documents(parsed: DataFrame, impl: str = "native") -> DataFrame:
     """ONE pass over document text -> compact extraction frame.
 
     Output: (doc_id, media_refs, mentions array<struct>, synapse struct,
     node_attrs map<string,string> — layer/region property payloads).
-    Both pandas UDFs sit in the same projection, so Spark fuses them into a
-    single ArrowEvalPython node — the text crosses the Arrow boundary once.
+    Under ``impl='arrow'`` the pandas UDFs sit in the same projection, so
+    Spark fuses them into a single ArrowEvalPython node — the text crosses
+    the Arrow boundary once.
     The result is ~100× smaller than the raw text, which is what makes it
     the *correct* thing to persist at 100 TB: downstream branches (mention
     linking and synapse assembly) re-read this compact frame instead of
@@ -365,7 +367,7 @@ def synapses_from_extracted(extracted: DataFrame) -> DataFrame:
     )
 
 
-def detect_mentions(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
+def detect_mentions(parsed: DataFrame, impl: str = "native") -> DataFrame:
     """parsed documents -> (doc_id, kind, surface) mention rows.
 
     Media refs are mentions too (kind='media', surface=the ref) — the
@@ -377,7 +379,7 @@ def detect_mentions(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
     return mentions_from_extracted(extract_documents(parsed, impl))
 
 
-def detect_synapses(parsed: DataFrame, impl: str = "arrow") -> DataFrame:
+def detect_synapses(parsed: DataFrame, impl: str = "native") -> DataFrame:
     """parsed documents -> one row per synapse statement.
 
     Output: (doc_id, src_surface, tgt_surface, props map, afferent_section_type);

@@ -24,10 +24,18 @@ distributed write:
   rewrites finished partitions, and a *changed input* invalidates exactly
   the partitions it touches.
 
-Scale posture: the fingerprint pass is a single ``groupBy(part)`` hash
-aggregation (partial+final, no row explosion); the write is ONE Spark job
-covering all pending partitions via dynamic partition overwrite — never a
-driver-side loop of per-partition jobs.
+Scale posture: each call evaluates its input exactly once. The bucketed
+frame is persisted, and the one fingerprint action — a single
+``groupBy(part)`` hash aggregation, partial+final, no row explosion — both
+returns ≤ ``num_buckets`` rows and fills that cache. The skip/write/vacate
+decision is then plain Python on the driver over those rows and the latest
+manifest row per partition (also ≤ ``num_buckets``), so no Spark join over
+the manifest runs. The write is ONE Spark job covering all pending
+partitions via dynamic partition overwrite — never a driver-side loop of
+per-partition jobs — and it reads the persisted frame, not the input
+lineage. The cache is released in a ``finally``: a failed write must not
+leave a full copy of the table pinned in executor memory for the rest of
+the session.
 """
 
 from __future__ import annotations
@@ -157,25 +165,26 @@ def materialize(
     run_id = uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
-    bucketed = with_bucket(df, key_cols, num_buckets)
-    fresh = partition_fingerprints(bucketed)
+    # the input is evaluated ONCE: the fingerprint action fills this cache
+    # and the write below reads it back
+    bucketed = with_bucket(df, key_cols, num_buckets).persist()
+    try:
+        # ≤ num_buckets rows each side, so the decision runs on the driver
+        fresh = {
+            r[PART_COL]: r for r in partition_fingerprints(bucketed).collect()
+        }
+        done = committed_partitions(spark, table_path)
+        latest = [] if done is None else done.collect()
 
-    done = committed_partitions(spark, table_path)
-    vacated_ids: list[int] = []
-    if done is not None:
+        next_seq = max((r["committed_seq"] for r in latest), default=0) + 1
         # a partition is done iff its committed fingerprint matches the
         # fingerprint of *today's* input for that partition
-        pending = (
-            fresh.alias("f")
-            .join(
-                done.select(PART_COL, "input_fingerprint").alias("d"),
-                [PART_COL, "input_fingerprint"],
-                "left_anti",
-            )
-        )
-        next_seq = (
-            done.agg(F.max("committed_seq")).collect()[0][0] or 0
-        ) + 1
+        committed = {(r[PART_COL], r["input_fingerprint"]) for r in latest}
+        pending_rows = [
+            fresh[p]
+            for p in sorted(fresh)
+            if (p, fresh[p]["input_fingerprint"]) not in committed
+        ][:limit_parts]
         # committed partitions ABSENT from the new input: dynamic
         # overwrite can only replace partitions it has rows for, so an
         # emptied bucket keeps its stale files — tombstone it in the
@@ -184,38 +193,26 @@ def materialize(
         # bucket fingerprint-mismatches the tombstone and rewrites it.
         # row_count > 0 keeps re-runs idempotent (never re-tombstone).
         vacated_ids = sorted(
-            r[PART_COL]
-            for r in done.where(F.col("row_count") > 0)
-            .join(fresh.select(PART_COL), PART_COL, "left_anti")
-            .select(PART_COL)
-            .collect()
+            {r[PART_COL] for r in latest if r["row_count"] > 0} - fresh.keys()
         )
-    else:
-        pending = fresh
-        next_seq = 1
-
-    # pending partition ids: bounded by num_buckets (small), safe to collect
-    pending_rows = pending.collect()
-    pending_rows.sort(key=lambda r: r[PART_COL])
-    if limit_parts is not None:
-        pending_rows = pending_rows[:limit_parts]
-    pending_ids = [r[PART_COL] for r in pending_rows]
-    all_parts = [r[PART_COL] for r in fresh.select(PART_COL).collect()]
-    skipped = sorted(set(all_parts) - set(pending_ids))
-
-    rows_written = 0
-    if pending_ids:
-        to_write = bucketed.where(F.col(PART_COL).isin(pending_ids))
-        # ONE job for every pending partition; dynamic overwrite replaces
-        # only the partitions present in `to_write` (retry-safe: a partition
-        # half-written by a killed run is fully replaced, never appended to)
-        (
-            to_write.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy(PART_COL)
-            .mode("overwrite")
-            .parquet(table_path)
-        )
+        pending_ids = [r[PART_COL] for r in pending_rows]
+        skipped = sorted(fresh.keys() - set(pending_ids))
         rows_written = sum(r["row_count"] for r in pending_rows)
+
+        if pending_ids:
+            # ONE job for every pending partition; dynamic overwrite
+            # replaces only the partitions present in the frame (retry-safe:
+            # a partition half-written by a killed run is fully replaced,
+            # never appended to)
+            (
+                bucketed.where(F.col(PART_COL).isin(pending_ids))
+                .write.option("partitionOverwriteMode", "dynamic")
+                .partitionBy(PART_COL)
+                .mode("overwrite")
+                .parquet(table_path)
+            )
+    finally:
+        bucketed.unpersist()
 
     wall_ms = int((time.monotonic() - t0) * 1000)
     manifest_rows = [

@@ -155,3 +155,116 @@ def test_refresh_vacates_emptied_partitions(spark, tmp_path):
     assert rep3.partitions_written == [victim]
     assert {r.k for r in mat.read_materialized(spark, path).collect()} == set(range(40))
     assert mat.verify_against_manifest(spark, path).count() == 0
+
+
+def _counted_frame(spark, rows):
+    """``(k, payload)`` frame over ``rows`` plus an accumulator that counts
+    how many input rows Spark evaluates (one add per row per pass)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(row):
+        acc.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(rows, 4).map(tick)
+    return spark.createDataFrame(rdd, "k long, payload string"), acc
+
+
+def test_materialize_evaluates_input_once(spark, tmp_path):
+    """One pass over the input per call: the fingerprint action fills the
+    cache and the write reads it, on a fresh path and on a refresh."""
+    path = str(tmp_path / "once")
+    v1 = [(i, f"v{i}") for i in range(40)]
+    df1, acc1 = _counted_frame(spark, v1)
+    rep1 = mat.materialize(df1, path, ["k"], num_buckets=4)
+    assert rep1.rows_written == 40
+    assert acc1.value == len(v1)
+
+    # refresh with exactly one changed bucket
+    v2 = [(0, "changed")] + v1[1:]
+    df2, acc2 = _counted_frame(spark, v2)
+    rep2 = mat.materialize(df2, path, ["k"], num_buckets=4)
+    assert len(rep2.partitions_written) == 1
+    assert len(rep2.partitions_skipped) == 3
+    assert acc2.value == len(v2)
+
+
+def _refresh_inputs(spark, n_changed):
+    """(v1, v2, victim, changed): v2 drops every row of bucket ``victim``
+    and edits one row in each of ``n_changed`` other buckets; the
+    remaining buckets are byte-identical."""
+    v1 = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(80)], "k long, payload string"
+    )
+    first_key = {}  # bucket -> its lowest key
+    for r in mat.with_bucket(v1, ["k"], N_BUCKETS).orderBy("k").collect():
+        first_key.setdefault(r[mat.PART_COL], r.k)
+    parts = sorted(first_key)
+    assert len(parts) == N_BUCKETS
+    victim, changed = parts[0], parts[1 : 1 + n_changed]
+    edited = [first_key[p] for p in changed]
+    v2 = (
+        mat.with_bucket(v1, ["k"], N_BUCKETS)
+        .where(F.col(mat.PART_COL) != victim)
+        .drop(mat.PART_COL)
+        .withColumn(
+            "payload",
+            F.when(F.col("k").isin(edited), F.lit("edited")).otherwise(
+                F.col("payload")
+            ),
+        )
+    )
+    return v1, v2, victim, changed
+
+
+def _kv(df):
+    return sorted((r.k, r.payload) for r in df.collect())
+
+
+def _latest_manifest(spark, path):
+    return sorted(
+        (r[mat.PART_COL], r.input_fingerprint, r.row_count)
+        for r in mat.committed_partitions(spark, path).collect()
+    )
+
+
+def test_refresh_writes_vacates_and_skips_in_one_call(spark, tmp_path):
+    path = str(tmp_path / "mixed")
+    v1, v2, victim, changed = _refresh_inputs(spark, n_changed=1)
+    mat.materialize(v1, path, ["k"], N_BUCKETS)
+
+    rep = mat.materialize(v2, path, ["k"], N_BUCKETS)
+    assert rep.partitions_written == changed
+    assert rep.partitions_vacated == [victim]
+    assert rep.partitions_skipped == sorted(
+        set(range(N_BUCKETS)) - set(changed) - {victim}
+    )
+    assert rep.rows_written == (
+        mat.with_bucket(v2, ["k"], N_BUCKETS)
+        .where(F.col(mat.PART_COL).isin(changed))
+        .count()
+    )
+    assert _kv(mat.read_materialized(spark, path)) == _kv(v2)
+    assert mat.verify_against_manifest(spark, path).count() == 0
+
+
+def test_refresh_killed_then_resumed_equals_uninterrupted(spark, tmp_path):
+    v1, v2, victim, changed = _refresh_inputs(spark, n_changed=2)
+    straight, killed = str(tmp_path / "straight"), str(tmp_path / "killed")
+    for path in (straight, killed):
+        mat.materialize(v1, path, ["k"], N_BUCKETS)
+    mat.materialize(v2, straight, ["k"], N_BUCKETS)
+
+    # the refresh dies after committing the lowest changed bucket
+    rep1 = mat.materialize(v2, killed, ["k"], N_BUCKETS, limit_parts=1)
+    assert rep1.partitions_written == changed[:1]
+    assert rep1.partitions_vacated == [victim]
+    rep2 = mat.materialize(v2, killed, ["k"], N_BUCKETS)
+    assert rep2.partitions_written == changed[1:]
+    assert rep2.partitions_vacated == []
+
+    assert _kv(mat.read_materialized(spark, killed)) == _kv(
+        mat.read_materialized(spark, straight)
+    ) == _kv(v2)
+    assert _latest_manifest(spark, killed) == _latest_manifest(spark, straight)
+    assert mat.verify_against_manifest(spark, killed).count() == 0
