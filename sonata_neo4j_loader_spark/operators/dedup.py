@@ -6,16 +6,30 @@ MinHash signatures, banding, and Hamming distances are built from
 ``transform``/``aggregate``/``xxhash64`` higher-order expressions that stay
 inside whole-stage codegen.
 
-Scale design (the part that matters at 10^12 docs):
+Scale design (the part that matters at 10^12 docs): every near-dup
+detector is one recipe — postings → bounded self-join → lossless prune →
+exact verify — and the recipe's stages are written once, as the private
+core below, never an all-pairs cross join:
 
-* candidate generation is always *bucketed* (LSH band buckets / simhash
-  chunk buckets) — never an all-pairs cross join;
-* within a bucket, pairs are produced by a self-equi-join on the bucket
-  key with ``id_a < id_b``, so Catalyst plans a shuffle hash join on the
-  bucket key; hot buckets are bounded by ``max_bucket_size`` (drop
-  degenerate buckets — e.g. the empty-document shingle set — instead of
-  letting one reducer explode);
-* verification (true Jaccard / cosine) runs only on candidates.
+* postings: :func:`_minhash_postings` bands MinHash signatures into
+  ``(band, bucket)`` keys, optionally carrying a shingle membership
+  bitmap built by :func:`_bitmap_word` (MinHash LSH candidates, the
+  MinHash near-dup detector, the persisted incremental index); SimHash
+  chunk/piece keys, the n-gram prefix index (its exact-bitmap leg also
+  uses :func:`_bitmap_word`) and embedding-LSH bands build their own keys;
+* bound: hot buckets are bounded by ``max_bucket_size`` (drop degenerate
+  buckets — e.g. the empty-document shingle set — instead of letting one
+  reducer explode): :func:`drop_hot_buckets` for LSH candidates, SimHash,
+  embeddings and the incremental probe, a same-key count window in
+  :func:`minhash_near_duplicates`;
+* pairs: :func:`_self_pairs` self-equi-joins the postings on the bucket
+  key with ``id_a < id_b`` — a shuffle hash join on that key — for every
+  self-join detector (similarity's embedding near-dup included);
+* prune: the AllPairs size filter :func:`_size_ok` (MinHash near-dup and
+  both n-gram legs) plus the bitmap popcount bounds;
+* verify: true Jaccard via :func:`_scored_jaccard` (``jaccard_verify``,
+  the incremental probe, the n-gram array leg); SimHash Hamming, the
+  n-gram bitmap leg and embedding cosine verify inline in the join.
 """
 
 from __future__ import annotations
@@ -25,7 +39,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import add_shingles, fingerprint, normalized_text
+from .text import add_shingles, fingerprint
 
 _LOG = logging.getLogger(__name__)
 
@@ -146,33 +160,6 @@ def _affine_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, seed: int = 42
-) -> Column:
-    """MinHash signature (array<bigint> of length ``num_hashes``).
-
-    One string hash per shingle (xxhash64 masked to 31 bits), then the
-    classic affine family h_i(x) = (a_i·x + b_i) mod (2^31−1) — the 31-bit
-    mask keeps a_i·x inside a 64-bit long under ANSI mode, and the string
-    hashing cost is paid once, not ``num_hashes`` times.
-
-    NOTE: callers should bind ``shingles`` to a *projected column*, not an
-    inline expression — Catalyst inlines expression arguments into every
-    signature branch (see :func:`minhash_lsh_candidates`).
-    """
-    hashed = F.transform(
-        shingles, lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
-    )
-    params = _affine_params(num_hashes, seed)
-
-    def affine(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
-
-    return F.array(
-        *[F.array_min(F.transform(hashed, affine(a, b))) for (a, b) in params]
-    )
-
-
 def drop_hot_buckets(
     df: DataFrame,
     keys: list[str],
@@ -214,22 +201,45 @@ def drop_hot_buckets(
     return df.join(small, keys, "left_semi")
 
 
-def banded_postings(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Banded MinHash-LSH postings ``(_id, band, bucket)`` — one row per
-    (doc, band), where ``bucket`` hashes the band's signature slice.
+def _bitmap_word(arr: str, w: int, nbits: int | None = None) -> Column:
+    """Word ``w`` of the membership bitmap of the int-array column ``arr``,
+    as the non-nullable long column ``_bm{w}``.
 
-    The shared core of :func:`minhash_lsh_candidates` (self-join pairing)
-    and :func:`build_minhash_index` / :func:`minhash_incremental_duplicates`
-    (persisted-index probing): two docs are LSH candidates iff they share a
-    (band, bucket) posting.
+    Element h sets bit ``h % 64`` of word ``(h % nbits) div 64`` — hashes
+    folded into an ``nbits``-bit bitmap — or, with ``nbits=None``, of word
+    ``h div 64``, for collision-free bit indexes below the bitmap width.
+    """
+    word = f"(h % {nbits}) div 64" if nbits else "h div 64"
+    return F.coalesce(
+        F.expr(
+            f"aggregate({arr}, cast(0 as bigint), (acc, h) -> "
+            f"if({word} = {w}, "
+            f"acc | shiftleft(cast(1 as bigint), cast(h % 64 as int)), acc))"
+        ),
+        F.lit(0),
+    ).alias(f"_bm{w}")
+
+
+def _minhash_postings(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+    num_hashes: int,
+    bands: int,
+    seed: int,
+    nwords: int = 0,
+) -> DataFrame:
+    """Banded MinHash-LSH postings ``(_id, n, _bm0.., band, bucket)`` —
+    one row per (doc, band), where ``bucket`` hashes the band's signature
+    slice, ``n`` is the doc's distinct-shingle count and ``_bm0`` ..
+    ``_bm{nwords-1}`` are the words of its ``nwords·64``-bit shingle-hash
+    membership bitmap (none by default).
+
+    One string hash per shingle (xxhash64 masked to 31 bits), then the
+    classic affine family h_i(x) = (a_i·x + b_i) mod (2^31−1) — the 31-bit
+    mask keeps a_i·x inside a 64-bit long under ANSI mode, and the string
+    hashing cost is paid once, not ``num_hashes`` times.
     """
     rows_per_band = num_hashes // bands
     # Two projection steps: shingles materialize once per row, then the 31-bit
@@ -242,6 +252,7 @@ def banded_postings(
         shingle_k,
     ).select(
         "_id",
+        F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
         F.transform(
             "shingles", lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
         ).alias("hs"),
@@ -251,14 +262,19 @@ def banded_postings(
     def affine(a: int, b: int):
         return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
 
+    bm_names = [f"_bm{w}" for w in range(nwords)]
     sigs = hashed.select(
         "_id",
+        "n",
+        *[_bitmap_word("hs", w, nwords * 64) for w in range(nwords)],
         F.array(
             *[F.array_min(F.transform("hs", affine(a, b))) for (a, b) in params]
         ).alias("sig"),
     )
     return sigs.select(
         "_id",
+        "n",
+        *bm_names,
         F.explode(
             F.array(
                 *[
@@ -278,7 +294,105 @@ def banded_postings(
                 ]
             )
         ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
+    ).select("_id", "n", *bm_names, "bb.band", "bb.bucket")
+
+
+def _self_pairs(
+    posts: DataFrame, keys: list[str], id_col: str, cols: list[str]
+) -> DataFrame:
+    """Every pair of postings that share ``keys``, as ``id_a < id_b`` —
+    once per shared key, so callers dedup pairs after pruning them. The
+    self-equi-join of every self-join detector: Catalyst plans it as a
+    shuffle hash join on the bucket key. Each column ``c`` of ``cols``
+    comes back as ``c_a`` and ``c_b``.
+    """
+
+    def side(s: str) -> DataFrame:
+        return posts.select(
+            *keys,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
+        )
+
+    return side("a").join(side("b"), keys).where(F.col("id_a") < F.col("id_b"))
+
+
+def _size_ok(threshold: float) -> Column:
+    """AllPairs SIZE filter over the pair's distinct-shingle counts
+    ``n_a``/``n_b``: m ≤ min(|A|,|B|) and union ≥ max(|A|,|B|) give
+    J ≤ min/max, so J ≥ t forces min(|A|,|B|) ≥ t·max(|A|,|B|). Lossless
+    (1e-9 slack admits the boundary; the exact verify rejects any extras)
+    — applied inside the posting join, it prunes pairs BEFORE the pair
+    ``distinct`` and the verify.
+    """
+    na, nb = F.col("n_a"), F.col("n_b")
+    return (na >= nb * F.lit(threshold) - F.lit(1e-9)) & (
+        nb >= na * F.lit(threshold) - F.lit(1e-9)
+    )
+
+
+def _scored_jaccard(
+    cands: DataFrame, a: DataFrame, b: DataFrame, ka: str, kb: str, threshold: float
+) -> DataFrame:
+    """Exact shingle Jaccard of the candidate pairs ``(ka, kb)``, keeping
+    J ≥ ``threshold``: returns ``(ka, kb, jaccard)``. ``a`` holds
+    ``(ka, sh_a)`` and ``b`` ``(kb, sh_b)`` — duplicate-free shingle arrays
+    (``add_shingles`` outputs), so their sizes ARE set cardinalities.
+
+    ONE array_intersect per pair (r06): the withColumn(jaccard)+where
+    shape evaluated intersect AND union twice each — Catalyst substitutes
+    the jaccard alias into the filter and turns it into a join condition,
+    then the output projection recomputes it (4 heavy array passes per
+    matched pair; plan-verified in plans/r06/minhash_near_dups_after.txt
+    operator (45)/(47)). Now |A∪B| = |A| + |B| − |A∩B| (identical ints,
+    identical double division, identical round), and the intersect size
+    is materialized ONCE behind a gen_barrier so the threshold filter
+    compares cheap ints instead of re-running the intersect inside the
+    join.
+    """
+    scored = (
+        cands.join(a, ka)
+        .join(b, kb)
+        .select(
+            ka,
+            kb,
+            gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
+            F.size("sh_a").alias("_na"),
+            F.size("sh_b").alias("_nb"),
+        )
+    )
+    return (
+        scored.withColumn(
+            "jaccard",
+            F.round(
+                F.col("_m") / (F.col("_na") + F.col("_nb") - F.col("_m")), 6
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select(ka, kb, "jaccard")
+    )
+
+
+def banded_postings(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_k: int = 5,
+    num_hashes: int = 32,
+    bands: int = 8,
+    seed: int = 42,
+) -> DataFrame:
+    """Banded MinHash-LSH postings ``(_id, band, bucket)`` — one row per
+    (doc, band), where ``bucket`` hashes the band's signature slice.
+
+    The posting side of :func:`minhash_lsh_candidates` (self-join pairing)
+    and :func:`build_minhash_index` / :func:`minhash_incremental_duplicates`
+    (persisted-index probing): two docs are LSH candidates iff they share a
+    (band, bucket) posting.
+    """
+    return _minhash_postings(
+        df, id_col, text_col, shingle_k, num_hashes, bands, seed
+    ).select("_id", "band", "bucket")
 
 
 def minhash_lsh_candidates(
@@ -305,11 +419,8 @@ def minhash_lsh_candidates(
     bounded = drop_hot_buckets(
         banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_candidates"
     )
-    a = bounded.select("band", "bucket", F.col("_id").alias("id_a"))
-    b = bounded.select("band", "bucket", F.col("_id").alias("id_b"))
     return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(bounded, ["band", "bucket"], "_id", [])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -322,59 +433,32 @@ def jaccard_verify(
     text_col: str = "text",
     shingle_k: int = 5,
     threshold: float = 0.8,
-    join_hint: str | None = None,
 ) -> DataFrame:
     """True shingle-Jaccard on candidate pairs; keep pairs ≥ threshold.
 
-    ``join_hint`` controls how the shingle-array side meets the pairs:
-    ``None`` leaves the planner free (fine when the corpus side is small),
-    ``'shuffle_hash'`` forces a shuffled hash join — the safe shape when
-    the shingle arrays are the HEAVY side: the planner's size estimate of
-    a computed array column is rows-based and routinely makes AQE build a
+    The shingle-array side meets the pairs through a shuffled hash join:
+    the arrays are the HEAVY side, and the planner's size estimate of a
+    computed array column is rows-based and routinely makes AQE build a
     broadcast HashedRelation out of the *arrays* (a single-threaded
     multi-hundred-MB build measured 23.4 s vs 9.5 s shuffled-hash at sf1.0
     — OPTIMIZATION_r06.md), and at corpus scale that broadcast is the
     8 GB-cap wall; shuffled-hash keeps both sides partitioned and builds
     per-partition tables in parallel (guide §3.1).
     """
-    sh = add_shingles(
-        _spread(df.select(F.col(id_col), text_col), id_col), text_col, shingle_k
-    ).select(id_col, "shingles")
-    if join_hint:
-        sh = sh.hint(join_hint)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    # ONE array_intersect per pair (r06): the withColumn(jaccard)+where
-    # shape evaluated intersect AND union twice each — Catalyst substitutes
-    # the jaccard alias into the filter and turns it into a join condition,
-    # then the output projection recomputes it (4 heavy array passes per
-    # matched pair; plan-verified in plans/r06/minhash_near_dups_after.txt
-    # operator (45)/(47)). Now: |A∪B| = |A| + |B| − |A∩B| (both sides are
-    # add_shingles outputs, hence duplicate-free, so the sizes ARE set
-    # cardinalities — identical ints, identical double division, identical
-    # round), and the intersect size is materialized ONCE behind a
-    # gen_barrier so the threshold filter compares cheap ints instead of
-    # re-running the intersect inside the join.
-    scored = (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
+    sh = (
+        add_shingles(
+            _spread(df.select(F.col(id_col), text_col), id_col), text_col, shingle_k
         )
+        .select(id_col, "shingles")
+        .hint("shuffle_hash")
     )
-    return (
-        scored.withColumn(
-            "jaccard",
-            F.round(
-                F.col("_m") / (F.col("_na") + F.col("_nb") - F.col("_m")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _scored_jaccard(
+        candidates,
+        sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
+        sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
+        "id_a",
+        "id_b",
+        threshold,
     )
 
 
@@ -411,10 +495,10 @@ def minhash_near_duplicates(
     positives paying two array joins plus a per-pair ``array_intersect``).
     This shape:
 
-    * carries a 1024-bit *shingle membership bitmap* — 16 scalar long
+    * carries a 2048-bit *shingle membership bitmap* — 32 scalar long
       columns, not an array, so the pair filter stays inside whole-stage
       codegen — plus the distinct-shingle count through the band-bucket
-      self-join (128 B/posting vs 1.6 KB);
+      self-join (256 B/posting vs 1.6 KB);
     * prunes pairs with two LOSSLESS bounds evaluated per co-occurrence:
       the AllPairs size bound (J ≥ t ⇒ min(n_a,n_b) ≥ t·max(n_a,n_b)) and
       the bitmap union bound — every set bit of ``bm_a|bm_b`` is hit by ≥1
@@ -446,70 +530,9 @@ def minhash_near_duplicates(
     """
     from pyspark.sql import Window
 
-    rows_per_band = num_hashes // bands
-    nwords = _BITMAP_WORDS
-    nbits = nwords * 64
-    sh = add_shingles(
-        _spread(df.select(F.col(id_col).alias("_id"), text_col), "_id"),
-        text_col,
-        shingle_k,
-    ).select("_id", "shingles")
-    hashed = sh.select(
-        "_id",
-        F.coalesce(F.size("shingles"), F.lit(0)).alias("n"),
-        F.transform(
-            "shingles", lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF))
-        ).alias("hs"),
+    posts = _minhash_postings(
+        df, id_col, text_col, shingle_k, num_hashes, bands, seed, _BITMAP_WORDS
     )
-    word_cols = [
-        F.coalesce(
-            F.expr(
-                f"aggregate(hs, cast(0 as bigint), (acc, h) -> "
-                f"if((h % {nbits}) div 64 = {w}, "
-                f"acc | shiftleft(cast(1 as bigint), cast(h % 64 as int)), acc))"
-            ),
-            F.lit(0),
-        ).alias(f"_bm{w}")
-        for w in range(nwords)
-    ]
-    params = _affine_params(num_hashes, seed)
-
-    def affine(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE31))
-
-    sigs = hashed.select(
-        "_id",
-        "n",
-        *word_cols,
-        F.array(
-            *[F.array_min(F.transform("hs", affine(a, b))) for (a, b) in params]
-        ).alias("sig"),
-    )
-    bm_names = [f"_bm{w}" for w in range(nwords)]
-    posts = sigs.select(
-        "_id",
-        "n",
-        *bm_names,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "n", *bm_names, "bb.band", "bb.bucket")
     if max_bucket_size is not None:
         _LOG.info(
             "minhash_near_duplicates: dropping buckets larger than %d members "
@@ -522,27 +545,10 @@ def minhash_near_duplicates(
             .where((F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket_size))
             .drop("_bn")
         )
-    a = posts.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_a"),
-        F.col("n").alias("n_a"),
-        *[F.col(f"_bm{w}").alias(f"_a{w}") for w in range(nwords)],
-    )
-    b = posts.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_b"),
-        F.col("n").alias("n_b"),
-        *[F.col(f"_bm{w}").alias(f"_b{w}") for w in range(nwords)],
-    )
-    na, nb = F.col("n_a"), F.col("n_b")
-    size_ok = (na >= nb * F.lit(threshold) - F.lit(1e-9)) & (
-        nb >= na * F.lit(threshold) - F.lit(1e-9)
-    )
+    bm_names = [f"_bm{w}" for w in range(_BITMAP_WORDS)]
     or_pop = None
-    for w in range(nwords):
-        word = F.bit_count(F.col(f"_a{w}").bitwiseOR(F.col(f"_b{w}")))
+    for c in bm_names:
+        word = F.bit_count(F.col(f"{c}_a").bitwiseOR(F.col(f"{c}_b")))
         or_pop = word if or_pop is None else or_pop + word
     # Single-reference form of the union bound (r06b): with
     # m_ub = n_a+n_b−or_pop, the bound  m_ub ≥ t·(n_a+n_b−m_ub)  is
@@ -554,18 +560,16 @@ def minhash_near_duplicates(
     # or_pop ≤ popcount-bound ≤ |A∪B|; the 1e-9 slack (≥ the old form's
     # effective slack 1e-9/(1+t)) only ever ADMITS extra candidates,
     # which the exact verify rejects — output identical.
-    ub_ok = or_pop.cast("double") <= (na + nb).cast("double") / F.lit(
+    ub_ok = or_pop.cast("double") <= (F.col("n_a") + F.col("n_b")).cast("double") / F.lit(
         1.0 + threshold
     ) + F.lit(1e-9)
     cands = (
-        a.join(b, ["band", "bucket"])
-        .where((F.col("id_a") < F.col("id_b")) & size_ok & ub_ok)
+        _self_pairs(posts, ["band", "bucket"], "_id", ["n", *bm_names])
+        .where(_size_ok(threshold) & ub_ok)
         .select("id_a", "id_b")
         .distinct()
     )
-    return jaccard_verify(
-        cands, df, id_col, text_col, shingle_k, threshold, join_hint="shuffle_hash"
-    )
+    return jaccard_verify(cands, df, id_col, text_col, shingle_k, threshold)
 
 
 def build_minhash_index(
@@ -725,30 +729,7 @@ def minhash_incremental_duplicates(
     hist_sh = add_shingles(hist_cand, text_col, meta.shingle_k).select(
         "hist_id", F.col("shingles").alias("sh_b")
     )
-    # single-eval size-formula verify — same shape (and rationale) as
-    # jaccard_verify: one barriered intersect per pair, |A∪B| from the
-    # duplicate-free sizes, threshold filter over materialized ints.
-    scored = (
-        cands.join(new_sh, "new_id")
-        .join(hist_sh, "hist_id")
-        .select(
-            "new_id",
-            "hist_id",
-            gen_barrier(F.size(F.array_intersect("sh_a", "sh_b"))).alias("_m"),
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-        )
-    )
-    return (
-        scored.withColumn(
-            "jaccard",
-            F.round(
-                F.col("_m") / (F.col("_na") + F.col("_nb") - F.col("_m")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "hist_id", "jaccard")
-    )
+    return _scored_jaccard(cands, new_sh, hist_sh, "new_id", "hist_id", threshold)
 
 
 def near_dup_survivors(
@@ -942,12 +923,6 @@ def simhash_near_duplicates(
             " piece * 12) & 4095, 0)"
         ),
     )
-    a = refined.select(
-        "chunk", "val", "piece", "pval", F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")
-    )
-    b = refined.select(
-        "chunk", "val", "piece", "pval", F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")
-    )
     # Hamming filter BEFORE the pair distinct (r06, part of the same
     # rework): the exact bit_count(xor) verify is two instructions, so it
     # runs inside the join's codegen stage and the distinct then shuffles
@@ -961,8 +936,7 @@ def simhash_near_duplicates(
     # i.e. isnotnull(<full simhash expr>) — from being inferred and
     # pushed into the scan (see the key coalesce note above).
     return (
-        a.join(b, ["chunk", "val", "piece", "pval"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(refined, ["chunk", "val", "piece", "pval"], "_id", ["sh"])
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .where(F.coalesce(F.col("hamming") <= max_hamming, F.lit(False)))
         .select("id_a", "id_b", "hamming")
@@ -1135,38 +1109,19 @@ def ngram_jaccard_pairs(
     if universe is not None:
         return _ngram_jaccard_pairs_bitmap(sh, universe, id_col, threshold)
     prefix = prefix_index(sh, id_col, threshold)
-    a = prefix.select(F.col(id_col).alias("id_a"), "shingle", F.col("n").alias("n_a"))
-    b = prefix.select(F.col(id_col).alias("id_b"), "shingle", F.col("n").alias("n_b"))
-    # AllPairs SIZE filter, applied inside the posting join: m ≤ min(|A|,|B|)
-    # and union ≥ max(|A|,|B|) give J ≤ min/max, so J ≥ t forces
-    # min(|A|,|B|) ≥ t·max(|A|,|B|). Lossless (1e-9 slack admits the
-    # boundary; the exact verify rejects any extras) — it prunes candidate
-    # pairs BEFORE the distinct and the array_intersect verify.
-    size_ok = (
-        F.col("n_a") >= F.col("n_b") * F.lit(threshold) - F.lit(1e-9)
-    ) & (F.col("n_b") >= F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
     cands = (
-        a.join(b, "shingle")
-        .where((F.col("id_a") < F.col("id_b")) & size_ok)
+        _self_pairs(prefix, ["shingle"], id_col, ["n"])
+        .where(_size_ok(threshold))
         .select("id_a", "id_b")
         .distinct()
     )
-    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("m", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("m")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("m")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _scored_jaccard(
+        cands,
+        sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")),
+        sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")),
+        "id_a",
+        "id_b",
+        threshold,
     )
 
 
@@ -1210,8 +1165,9 @@ def _ngram_jaccard_pairs_bitmap(
     # normalize+shingle expression into scan-level filters below the
     # _spread exchange (2 extra serial evaluations per row — measured
     # 12.1 s of this operator's prefix leg alone at sf0.1; see the
-    # helper's doc). Scoped to this leg: the array fallback keeps its
-    # r05 plan (the barrier interacts badly with its verify joins).
+    # helper's doc). Scoped to this leg: the array fallback leaves its
+    # shingle arrays unbarriered (the barrier interacts badly with its
+    # verify joins).
     shb = (
         sh.select(F.col(id_col), gen_barrier(F.col("shingles")).alias("shingles"))
         .select(
@@ -1226,17 +1182,6 @@ def _ngram_jaccard_pairs_bitmap(
             "_bits",
         )
     )
-    word_cols = [
-        F.coalesce(
-            F.expr(
-                f"aggregate(_bits, cast(0 as bigint), (acc, b) -> "
-                f"if(b div 64 = {w}, "
-                f"acc | shiftleft(cast(1 as bigint), cast(b % 64 as int)), acc))"
-            ),
-            F.lit(0),
-        ).alias(f"_bm{w}")
-        for w in range(nwords)
-    ]
     # prefix = the p = n − ⌈t·n⌉ + 1 lowest bit indexes (1e-9 slack as in
     # prefix_index); explode to int-keyed postings carrying the bitmap
     prefix_len = (
@@ -1247,25 +1192,9 @@ def _ngram_jaccard_pairs_bitmap(
     posts = shb.select(
         F.col(id_col),
         "n",
-        *word_cols,
+        *[_bitmap_word("_bits", w) for w in range(nwords)],
         F.explode(F.slice("_bits", F.lit(1), prefix_len)).alias("t_bit"),
     )
-    bm_names = [f"_bm{w}" for w in range(nwords)]
-    a = posts.select(
-        F.col(id_col).alias("id_a"),
-        "t_bit",
-        F.col("n").alias("n_a"),
-        *[F.col(c).alias(f"a{c}") for c in bm_names],
-    )
-    b = posts.select(
-        F.col(id_col).alias("id_b"),
-        "t_bit",
-        F.col("n").alias("n_b"),
-        *[F.col(c).alias(f"b{c}") for c in bm_names],
-    )
-    size_ok = (
-        F.col("n_a") >= F.col("n_b") * F.lit(threshold) - F.lit(1e-9)
-    ) & (F.col("n_b") >= F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
     # minimal-shared-bit test: no and-bit strictly below t_bit — per word
     # w the below-mask is all-ones left of t_bit's word, zero right of
     # it, and (1 << t_bit%64) − 1 inside it
@@ -1279,7 +1208,7 @@ def _ngram_jaccard_pairs_bitmap(
     is_min_shared = F.coalesce(
         sum(
             F.bit_count(
-                F.col(f"a_bm{w}").bitwiseAND(F.col(f"b_bm{w}")).bitwiseAND(
+                F.col(f"_bm{w}_a").bitwiseAND(F.col(f"_bm{w}_b")).bitwiseAND(
                     below_mask(w)
                 )
             )
@@ -1289,19 +1218,21 @@ def _ngram_jaccard_pairs_bitmap(
     ) == 0
     m = F.coalesce(
         sum(
-            F.bit_count(F.col(f"a_bm{w}").bitwiseAND(F.col(f"b_bm{w}")))
+            F.bit_count(F.col(f"_bm{w}_a").bitwiseAND(F.col(f"_bm{w}_b")))
             for w in range(nwords)
         ),
         F.lit(0),
     )
+
+    def jaccard(m: Column) -> Column:
+        return F.round(m / (F.col("n_a") + F.col("n_b") - m), 6)
+
+    # one filter, so the optimizer puts it in the join condition after
+    # _self_pairs' cheap id_a < id_b test; the output projects m once
+    bm_names = [f"_bm{w}" for w in range(nwords)]
     return (
-        a.join(b, "t_bit")
-        .where((F.col("id_a") < F.col("id_b")) & size_ok & is_min_shared)
+        _self_pairs(posts, ["t_bit"], id_col, ["n", *bm_names])
+        .where(_size_ok(threshold) & is_min_shared & (jaccard(m) >= threshold))
         .withColumn("m", m)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("m") / (F.col("n_a") + F.col("n_b") - F.col("m")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select("id_a", "id_b", jaccard(F.col("m")).alias("jaccard"))
     )

@@ -19,7 +19,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import drop_hot_buckets
+from .dedup import _self_pairs, drop_hot_buckets
 
 _LOG = logging.getLogger(__name__)
 
@@ -444,23 +444,8 @@ def embedding_near_duplicates(
     e = drop_hot_buckets(
         e, ["band", "bucket"], max_bucket_size, "embedding_near_duplicates"
     )
-    a = e.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_a"),
-        F.col("vec").alias("vec_a"),
-        F.col("_norm").alias("_norm_a"),
-    )
-    b = e.select(
-        "band",
-        "bucket",
-        F.col("_id").alias("id_b"),
-        F.col("vec").alias("vec_b"),
-        F.col("_norm").alias("_norm_b"),
-    )
     return (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(e, ["band", "bucket"], "_id", ["vec", "_norm"])
         .withColumn(
             "cos",
             F.round(

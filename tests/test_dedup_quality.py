@@ -83,6 +83,41 @@ def test_simhash_finds_every_pair_within_guarantee(spark, corpus, planted_ids):
     assert all(r.hamming <= 3 for r in rows)
 
 
+@pytest.mark.parametrize("max_bucket_size", [None, 3])
+def test_minhash_near_dups_equal_verified_lsh_candidates(spark, max_bucket_size):
+    # minhash_near_duplicates' fast paths (count-window bucket bound,
+    # bitmap union-bound prune) against the reference path: the
+    # drop_hot_buckets candidates exact-verified by jaccard_verify. Six
+    # identical boilerplate docs plant a hot bucket — each of their band
+    # buckets holds ≥ 6 members, so max_bucket_size=3 must drop it.
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    boiler_id = 9_000_000
+    boiler = spark.createDataFrame(
+        [(boiler_id + i, "terms of service: all rights reserved, do not copy.") for i in range(6)],
+        "doc_id long, text string",
+    )
+    df = docs.unionByName(boiler)
+    got = sorted(
+        tuple(r)
+        for r in dedup.minhash_near_duplicates(
+            df, threshold=0.6, max_bucket_size=max_bucket_size
+        ).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in dedup.jaccard_verify(
+            dedup.minhash_lsh_candidates(df, max_bucket_size=max_bucket_size),
+            df,
+            threshold=0.6,
+        ).collect()
+    )
+    assert got == want
+    boiler_pairs = [r for r in got if r[0] >= boiler_id]
+    assert len(boiler_pairs) == (15 if max_bucket_size is None else 0)
+
+
 def test_exact_dedup_ignores_planted_mutations(corpus):
     # the mutated twins are NOT exact duplicates — exact dedup must keep
     # every planted doc as its own group

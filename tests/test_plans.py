@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sonata_neo4j_loader_spark.datagen import documents as dg
-from sonata_neo4j_loader_spark.operators import linking, parse
+from sonata_neo4j_loader_spark.operators import dedup, linking, parse
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -266,16 +266,36 @@ def test_bucketed_asof_corpus_windows_partition_on_bucket(spark):
     assert key_only == 1  # exactly the summary carry
 
 
-def test_minhash_verify_single_intersect_no_union(spark):
-    # r06 third pass: the exact verify must evaluate ONE array_intersect
-    # per pair and no array_union at all — the jaccard alias used to be
-    # substituted into the second verify join's condition AND recomputed
-    # in the output projection (2x intersect + 2x union per pair), and
-    # the union is now derived from the duplicate-free sizes
-    from sonata_neo4j_loader_spark.operators import dedup
+def _incremental_verify(spark, docs, tmp_path):
+    hist = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
+    batch = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text")
+    idx = str(tmp_path / "mh_idx")
+    dedup.build_minhash_index(hist, idx)
+    return dedup.minhash_incremental_duplicates(spark, idx, hist, batch, threshold=0.6)
 
+
+_EXACT_VERIFY_CALLERS = {
+    "minhash_near_duplicates": lambda spark, docs, tmp_path: dedup.minhash_near_duplicates(
+        docs, "doc_id", "text", threshold=0.6
+    ),
+    # k=2 has no exact-bitmap leg: this is the array-verify fallback
+    "ngram_jaccard_pairs_k2": lambda spark, docs, tmp_path: dedup.ngram_jaccard_pairs(
+        docs, shingle_k=2, threshold=0.6
+    ),
+    "minhash_incremental_duplicates": _incremental_verify,
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_EXACT_VERIFY_CALLERS))
+def test_minhash_verify_single_intersect_no_union(spark, tmp_path, caller):
+    # r06 third pass: every exact-Jaccard verify must evaluate ONE
+    # array_intersect per pair and no array_union at all — the jaccard
+    # alias used to be substituted into the second verify join's
+    # condition AND recomputed in the output projection (2x intersect +
+    # 2x union per pair), and the union is now derived from the
+    # duplicate-free sizes
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(dedup.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.6))
+    plan = _plan(_EXACT_VERIFY_CALLERS[caller](spark, docs, tmp_path))
     assert plan.count("array_intersect") == 1, plan.count("array_intersect")
     assert "array_union" not in plan
 
